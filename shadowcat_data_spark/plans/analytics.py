@@ -1116,7 +1116,13 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-order suppliers exactly as the old DISTINCT did, and sort_array
     gives the u < v orientation, so the edge SET is identical (both
     graph oracles stay hash-green)."""
-    ps = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    # NULL order keys must not group into one phantom order: the join
+    # formulation (and the oracle) never pairs lines on a NULL key
+    ps = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_suppkey")
+        .filter(F.col("l_orderkey").isNotNull())
+    )
     sups = ps.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_suppkey")).alias("ss")
     )

@@ -35,15 +35,12 @@ from ..registry import query
 from ..session import load_table
 from ..sources.io import _scratch
 from .lakehouse import (
-    CommitConflictError,
     _BOUNDS_SAMPLE_CAP,
-    _commit_manifest,
+    _commit_next,
     _partitioned_manifest,
     append_partitioned,
     create_partitioned,
-    current_version,
     merge_partitioned,
-    read_manifest,
     read_snapshot,
 )
 
@@ -53,7 +50,6 @@ def evolve_partition_spec(
     table: str,
     new_key: str,
     n_buckets: int = 8,
-    max_retries: int = 5,
 ) -> int:
     """Metadata-only commit: the table's partition spec becomes
     (new_key, fresh sampled bounds, spec_id+1). Existing files are kept
@@ -61,9 +57,8 @@ def evolve_partition_spec(
     stamped with the spec they were written under and their file-level
     min/max re-pointed at ``new_key``'s span from the column stats
     (None → conservative never-pruned when the footer had no span)."""
-    for _ in range(max_retries + 1):
-        version = current_version(table)
-        man = read_manifest(table, version)
+
+    def build(version: int, man: dict) -> dict:
         old = man["partition"]
         if old["key"] == new_key:
             raise ValueError(f"table already partitioned by {new_key!r}")
@@ -91,18 +86,9 @@ def evolve_partition_spec(
             st["min"], st["max"] = (span[0], span[1]) if span else (None, None)
             stats2[f] = st
         partition = {"key": new_key, "bounds": bounds, "spec_id": old_spec + 1}
-        manifest = _partitioned_manifest(
-            version + 1, man["schema"], partition, stats2, prev=man
-        )
-        try:
-            return _commit_manifest(
-                table, version + 1, manifest, operation="evolve-spec"
-            )
-        except FileExistsError:
-            continue
-    raise CommitConflictError(
-        f"spec evolution of {table!r} lost {max_retries + 1} commit races"
-    )
+        return _partitioned_manifest(man["schema"], partition, stats2, prev=man)
+
+    return _commit_next(table, "evolve-spec", build)
 
 
 # --- registered query --------------------------------------------------------

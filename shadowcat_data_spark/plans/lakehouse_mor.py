@@ -44,17 +44,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
 from ..session import load_table, materialize
-from . import lakehouse as _lh
 from .lakehouse import (
-    CommitConflictError,
     _bucket_expr,
+    _commit_next,
     _footer_stats,
     _fresh_partitioned_orders,
     _partitioned_manifest,
     _read_files_mor,
     _write_bucket_files,
-    current_version,
-    read_manifest,
     read_snapshot,
 )
 
@@ -91,7 +88,6 @@ def delete_mor(
     spark: SparkSession,
     table: str,
     keys: DataFrame,
-    max_retries: int = 5,
     extra: dict | None = None,
     eq_col: str | None = None,
 ) -> int:
@@ -103,16 +99,13 @@ def delete_mor(
     same way) — the l36 text-index postings erasure deletes on
     ``doc_id`` while the table stays partitioned by term bucket. NULL
     keys are ignored; a key absent from the table is a no-op (no
-    existence check at write time). Optimistic commit with the standard
-    re-read/retry loop."""
+    existence check at write time)."""
     keys = materialize(keys, eager=False)  # consumed once per attempt
-    for _ in range(max_retries + 1):
-        version = current_version(table)
-        man = read_manifest(table, version)
+
+    def build(version: int, man: dict) -> dict:
         key = eq_col or man["partition"]["key"]
         dentries = _write_delete_file(spark, table, keys, key, version + 1)
-        manifest = _partitioned_manifest(
-            version + 1,
+        return _partitioned_manifest(
             man["schema"],
             man["partition"],
             man["stats"],
@@ -122,22 +115,14 @@ def delete_mor(
                 **(extra or {}),
             },
         )
-        try:
-            return _lh._commit_manifest(
-                table, version + 1, manifest, operation="delete"
-            )
-        except FileExistsError:
-            continue  # lost the race: re-read the new head and retry
-    raise CommitConflictError(
-        f"MOR delete into {table!r} lost {max_retries + 1} commit races"
-    )
+
+    return _commit_next(table, "delete", build)
 
 
 def upsert_mor(
     spark: SparkSession,
     table: str,
     rows: DataFrame,
-    max_retries: int = 5,
     extra: dict | None = None,
     eq_col: str | None = None,
     delete_keys: DataFrame | None = None,
@@ -158,16 +143,10 @@ def upsert_mor(
     rows = materialize(rows, eager=False)  # feeds data files AND delete keys
     if delete_keys is not None:
         delete_keys = materialize(delete_keys, eager=False)
-    for _ in range(max_retries + 1):
-        version = current_version(table)
-        man = read_manifest(table, version)
-        part = man["partition"]
-        key = part["key"]
-        dcol = eq_col or key
-        entries = _write_bucket_files(
-            rows, table, key, part["bounds"], version + 1,
-            compression=man.get("codec"),
-        )
+
+    def build(version: int, man: dict) -> dict:
+        dcol = eq_col or man["partition"]["key"]
+        entries = _write_bucket_files(rows, table, man, version + 1)
         dentries = _write_delete_file(
             spark,
             table,
@@ -175,10 +154,9 @@ def upsert_mor(
             dcol,
             version + 1,
         )
-        manifest = _partitioned_manifest(
-            version + 1,
+        return _partitioned_manifest(
             man["schema"],
-            part,
+            man["partition"],
             {**man["stats"], **entries},
             prev=man,
             extra={
@@ -186,20 +164,11 @@ def upsert_mor(
                 **(extra or {}),
             },
         )
-        try:
-            return _lh._commit_manifest(
-                table, version + 1, manifest, operation="upsert"
-            )
-        except FileExistsError:
-            continue
-    raise CommitConflictError(
-        f"MOR upsert into {table!r} lost {max_retries + 1} commit races"
-    )
+
+    return _commit_next(table, "upsert", build)
 
 
-def materialize_deletes(
-    spark: SparkSession, table: str, max_retries: int = 5
-) -> tuple[int, int]:
+def materialize_deletes(spark: SparkSession, table: str) -> tuple[int, int]:
     """Fold standing delete files into the data: rewrite exactly the
     buckets holding deleted keys through the MOR read (deletes applied,
     new seq postdating every delete), carry all other files by
@@ -209,12 +178,14 @@ def materialize_deletes(
     (delete_files_removed, buckets_rewritten); (0, 0) without a commit
     when there is nothing to fold. This is the read-amplification
     reclaim job; ``auto_optimize`` runs it before compaction."""
-    for _ in range(max_retries + 1):
-        version = current_version(table)
-        man = read_manifest(table, version)
+    counts = (0, 0)
+
+    def build(version: int, man: dict) -> dict | None:
+        nonlocal counts
+        counts = (0, 0)
         dfiles = man.get("delete_files") or {}
         if not dfiles:
-            return 0, 0
+            return None
         part = man["partition"]
         key, bounds = part["key"], part["bounds"]
         from functools import reduce
@@ -260,27 +231,19 @@ def materialize_deletes(
         }
         folded = _read_files_mor(spark, table, man, touched_files)
         entries = _write_bucket_files(
-            folded, table, key, bounds, version + 1, n_out=len(touched),
-            compression=man.get("codec"),
+            folded, table, man, version + 1, n_out=len(touched)
         )
-        manifest = _partitioned_manifest(
-            version + 1,
+        counts = (len(dfiles), len(touched))
+        return _partitioned_manifest(
             man["schema"],
             part,
             {**untouched, **entries},
             prev=man,
             extra={"delete_files": {}},
         )
-        try:
-            _lh._commit_manifest(
-                table, version + 1, manifest, operation="materialize"
-            )
-            return len(dfiles), len(touched)
-        except FileExistsError:
-            continue
-    raise CommitConflictError(
-        f"materialize on {table!r} lost {max_retries + 1} commit races"
-    )
+
+    _commit_next(table, "materialize", build)
+    return counts
 
 
 # --- registered queries ------------------------------------------------------

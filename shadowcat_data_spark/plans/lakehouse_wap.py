@@ -37,8 +37,9 @@ from ..registry import query
 from ..session import load_table, materialize
 from . import lakehouse as _lh
 from .lakehouse import (
-    CommitConflictError,
+    _commit_next,
     _fresh_partitioned_orders,
+    _link_json,
     _orders_ranged_changes,
     _partitioned_manifest,
     _read_files_mor,
@@ -54,26 +55,20 @@ from .lakehouse import (
 # --- RESTORE ---------------------------------------------------------------
 
 
-def restore_snapshot(table: str, to_version: int, max_retries: int = 5) -> int:
+def restore_snapshot(table: str, to_version: int) -> int:
     """Commit a copy of ``to_version``'s manifest as the new head — the
     table reads as it did then, while every intermediate version stays
     in the log (append-only undo; Delta RESTORE's semantics). Metadata
     only: the restored head references the OLD data files, which
     retention keeps alive exactly as long as this live manifest lists
     them. The copy records ``restored_from`` for lineage."""
-    for _ in range(max_retries + 1):
-        head = current_version(table)
-        man = dict(read_manifest(table, to_version))
-        man["version"] = head + 1
-        man["restored_from"] = to_version
-        try:
-            return _lh._commit_manifest(
-                table, head + 1, man, operation="restore"
-            )
-        except FileExistsError:
-            continue
-    raise CommitConflictError(
-        f"restore of {table!r} lost {max_retries + 1} commit races"
+    return _commit_next(
+        table,
+        "restore",
+        lambda _v, _head: {
+            **read_manifest(table, to_version),
+            "restored_from": to_version,
+        },
     )
 
 
@@ -93,14 +88,7 @@ def tag_snapshot(table: str, name: str, version: int | None = None) -> int:
         version = current_version(table)
     read_manifest(table, version)  # must exist
     os.makedirs(_refs_dir(table), exist_ok=True)
-    path = os.path.join(_refs_dir(table), f"{name}.json")
-    tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"version": version}, fh)
-    try:
-        os.link(tmp, path)
-    finally:
-        os.unlink(tmp)
+    _link_json(os.path.join(_refs_dir(table), f"{name}.json"), {"version": version})
     return version
 
 
@@ -144,14 +132,10 @@ def stage_append(spark: SparkSession, table: str, rows: DataFrame) -> str:
     seq yet; publish stamps the committing version (so standing MOR
     delete files, which predate it, never apply to the staged rows)."""
     man = read_manifest(table)
-    part = man["partition"]
     stage_id = uuid.uuid4().hex[:12]
     # version tag in the stage path is only a filename hint; entries are
     # re-sequenced at publish time
-    entries = _write_bucket_files(
-        rows, table, part["key"], part["bounds"], current_version(table) + 1,
-        compression=man.get("codec"),
-    )
+    entries = _write_bucket_files(rows, table, man, current_version(table) + 1)
     for st in entries.values():
         st.pop("seq", None)
     os.makedirs(_staged_dir(table), exist_ok=True)
@@ -185,41 +169,28 @@ def discard_staged(table: str, stage_id: str) -> None:
     os.unlink(os.path.join(_staged_dir(table), f"{stage_id}.json"))
 
 
-def publish_staged(table: str, stage_id: str, max_retries: int = 5) -> int:
+def publish_staged(table: str, stage_id: str) -> int:
     """Promote the stage to a real commit: head manifest + staged entries
-    (re-stamped with the committing version as their seq), standard
-    optimistic retry. An append commutes with intervening commits — the
-    staged files attach to WHATEVER the head is by publish time, Iceberg's
-    fast-append — so a lost race re-reads and re-attaches, never
-    re-writes. The staged manifest is consumed (unlinked) on success."""
+    (re-stamped with the committing version as their seq). An append
+    commutes with intervening commits — the staged files attach to
+    WHATEVER the head is by publish time, Iceberg's fast-append — so a
+    lost race re-reads and re-attaches, never re-writes. The staged
+    manifest is consumed (unlinked) on success."""
     path = os.path.join(_staged_dir(table), f"{stage_id}.json")
     with open(path) as fh:
         staged = json.load(fh)
-    for _ in range(max_retries + 1):
-        head = current_version(table)
-        man = read_manifest(table, head)
+
+    def build(head: int, man: dict) -> dict:
         added = {
             f: {**st, "seq": head + 1} for f, st in staged["added_stats"].items()
         }
-        manifest = _partitioned_manifest(
-            head + 1,
-            man["schema"],
-            man["partition"],
-            {**man["stats"], **added},
-            prev=man,
+        return _partitioned_manifest(
+            man["schema"], man["partition"], {**man["stats"], **added}, prev=man
         )
-        try:
-            v = _lh._commit_manifest(
-                table, head + 1, manifest, operation="publish"
-            )
-            os.unlink(path)
-            return v
-        except FileExistsError:
-            continue
-    raise CommitConflictError(
-        f"publish of stage {stage_id!r} into {table!r} lost "
-        f"{max_retries + 1} commit races"
-    )
+
+    v = _commit_next(table, "publish", build)
+    os.unlink(path)
+    return v
 
 
 # --- registered queries ----------------------------------------------------

@@ -38,7 +38,6 @@ no Python reimplementation to drift.
 from __future__ import annotations
 
 import os
-import uuid
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -47,15 +46,13 @@ from ..registry import query
 from ..session import load_table
 from ..sources.io import _scratch
 from .lakehouse import (
-    CommitConflictError,
     _BOUNDS_SAMPLE_CAP,
     _bucket_expr,
-    _collect_stage_entries,
-    _commit_manifest,
+    _commit_next,
     _partitioned_manifest,
     _read_files_mor,
+    _write_stage,
     create_partitioned,
-    current_version,
     read_manifest,
 )
 
@@ -113,7 +110,6 @@ def rewrite_zorder(
     cols: list[str],
     bits: int = 4,
     slices_per_bucket: int = 4,
-    max_retries: int = 5,
 ) -> tuple[int, int]:
     """Z-order rewrite: re-cluster every bucket's rows along the z-curve
     of ``cols`` and split each bucket into ``slices_per_bucket`` files,
@@ -126,31 +122,28 @@ def rewrite_zorder(
     aggregate. Returns (files_before, files_after)."""
     if not cols:
         raise ValueError("rewrite_zorder needs at least one column")
-    for _ in range(max_retries + 1):
-        version = current_version(table)
-        man = read_manifest(table, version)
+    n_before = n_after = 0
+
+    def build(version: int, man: dict) -> dict:
+        nonlocal n_before, n_after
         part = man["partition"]
         key, bounds = part["key"], part["bounds"]
         n_before = len(man["files"])
         df = _read_files_mor(spark, table, man, man["files"])
         zbounds = _sampled_bounds(df, cols, 1 << bits)
-        stage_rel = os.path.join(
-            "data", f"v{version + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
         n_parts = max((len(bounds) + 1) * max(slices_per_bucket, 1), 1)
-        (
+        entries = _write_stage(
             df.withColumn("__bucket", _bucket_expr(F.col(key), bounds))
             .withColumn("__z", _zvalue_expr(cols, zbounds, bits))
             .repartitionByRange(n_parts, F.col("__bucket"), F.col("__z"))
             .sortWithinPartitions("__bucket", "__z", key)
-            .drop("__z")
-            .write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(table, stage_rel))
-        )
-        entries = _collect_stage_entries(table, stage_rel, key, version + 1)
-        manifest = _partitioned_manifest(
+            .drop("__z"),
+            table,
+            man,
             version + 1,
+        )
+        n_after = len(entries)
+        return _partitioned_manifest(
             man["schema"],
             part,
             entries,
@@ -160,14 +153,9 @@ def rewrite_zorder(
                 "zorder": {"cols": list(cols), "bits": bits},
             },
         )
-        try:
-            _commit_manifest(table, version + 1, manifest, operation="rewrite-zorder")
-            return n_before, len(entries)
-        except FileExistsError:
-            continue
-    raise CommitConflictError(
-        f"z-order rewrite of {table!r} lost {max_retries + 1} optimistic-commit races"
-    )
+
+    _commit_next(table, "rewrite-zorder", build)
+    return n_before, n_after
 
 
 def pruned_files_box(
@@ -297,7 +285,6 @@ def add_bloom_filters(
     col: str,
     bits_per_key: int = 10,
     k: int = 3,
-    max_retries: int = 5,
     only_missing: bool = False,
 ) -> int:
     """Maintenance commit: one bloom bitmap per data file over ``col``,
@@ -318,9 +305,8 @@ def add_bloom_filters(
     bytes, not table bytes. The trade: a new file denser than the
     original sizing degrades its false-positive rate gracefully (never
     correctness); a periodic full rebuild re-sizes."""
-    for _ in range(max_retries + 1):
-        version = current_version(table)
-        man = read_manifest(table, version)
+
+    def build(version: int, man: dict) -> dict | None:
         files = man["files"]
         params = (man.get("bloom") or {}).get(col)
         if only_missing and params is not None:
@@ -335,7 +321,7 @@ def add_bloom_filters(
             # service correctly does nothing (same contract as
             # auto-OPTIMIZE on empty input); the probe side conservatively
             # keeps all files lacking bloom params
-            return version
+            return None
         df = (
             spark.read.schema(man["schema"])
             .parquet(*[os.path.join(table, f) for f in files])
@@ -343,8 +329,9 @@ def add_bloom_filters(
             .where(F.col(col).isNotNull())
         )
         if only_missing and params is not None:
-            m_bits, k = int(params["m"]), int(params["k"])
+            m_bits, n_hashes = int(params["m"]), int(params["k"])
         else:
+            n_hashes = k
             max_ndv = (
                 df.groupBy("__file")
                 .agg(F.approx_count_distinct(col).alias("n"))
@@ -362,7 +349,7 @@ def add_bloom_filters(
         # peaked at ~32 MB/file at m=2^22.)
         rows = (
             df.select(
-                "__file", F.explode(F.array(*_hash_positions(F.col(col), m_bits, k))).alias("p")
+                "__file", F.explode(F.array(*_hash_positions(F.col(col), m_bits, n_hashes))).alias("p")
             )
             .distinct()
             .select(
@@ -386,17 +373,10 @@ def add_bloom_filters(
             blooms = dict(stats[f].get("bloom") or {})
             blooms[col] = {"bits": bitmaps.get(f, "0")}
             stats[f]["bloom"] = blooms
-        man2 = dict(man)
-        man2["version"] = version + 1
-        man2["stats"] = stats
-        man2["bloom"] = {**(man.get("bloom") or {}), col: {"m": m_bits, "k": k}}
-        try:
-            return _commit_manifest(table, version + 1, man2, operation="add-bloom")
-        except FileExistsError:
-            continue
-    raise CommitConflictError(
-        f"bloom build on {table!r} lost {max_retries + 1} optimistic-commit races"
-    )
+        bloom = {**(man.get("bloom") or {}), col: {"m": m_bits, "k": n_hashes}}
+        return {**man, "stats": stats, "bloom": bloom}
+
+    return _commit_next(table, "add-bloom", build)
 
 
 def pruned_files_bloom(

@@ -283,7 +283,7 @@ def materialize(df: DataFrame, eager: bool = False, iterative: bool = False) -> 
     if sc.master.startswith("local"):
         return df.localCheckpoint(eager=eager)
     if iterative:
-        if sc._jsc.sc().getCheckpointDir().isDefined():
+        if sc.getCheckpointDir() is not None:
             return df.checkpoint(eager=eager)
         return df.localCheckpoint(eager=eager)
     from pyspark.storagelevel import StorageLevel

@@ -792,6 +792,27 @@ def test_triangle_count_on_constructed_graphs(spark):
     assert (k5_big.n_nodes, k5_big.n_edges, k5_big.n_triangles) == (5, 10, 10)
 
 
+def test_cosupply_edges_ignore_null_order_keys(spark, tmp_path):
+    """Lines with a NULL l_orderkey belong to no order: they must not
+    group into one phantom order whose supplier pairs add co-supply
+    support (the oracle's self-join on l_orderkey never pairs them).
+    Supplier pair (1, 2) shares 4 real orders plus the NULL-key lines —
+    one short of the min-support 5 — while (3, 4) shares 5 real orders."""
+    import os
+
+    from shadowcat_data_spark.plans.analytics import _cosupply_edges
+
+    lines = [(o, s) for o in range(1, 5) for s in (1, 2)]
+    lines += [(o, s) for o in range(10, 15) for s in (3, 4)]
+    lines += [(None, 1), (None, 2), (None, 1)]
+    sf = str(tmp_path / "sf")
+    spark.createDataFrame(lines, "l_orderkey long, l_suppkey long").coalesce(
+        1
+    ).write.parquet(os.path.join(sf, "lineitem.parquet"))
+    edges = {(r.u, r.v) for r in _cosupply_edges(spark, sf).collect()}
+    assert edges == {(3, 4)}
+
+
 def test_mm_resize_partitioning_invariant(spark):
     """The real resize kernels are per-row deterministic: 1-partition and
     7-partition runs must produce identical rows, and the output dims are
@@ -1381,41 +1402,228 @@ def test_runtime_filter_join_prunes_probe_files(spark, tmp_path):
     assert [f.name for f in j0.schema.fields][:2] == ["k", "v"]
 
 
-def test_concurrent_merges_both_land(spark, tmp_path):
-    """Optimistic-commit retry: writer A loses the version race to writer
-    B mid-commit, re-reads the new head, re-applies its change-set — BOTH
-    change-sets land and the final table equals their serial application."""
+@pytest.fixture
+def lose_next_commit(monkeypatch):
+    """Arm a commit race: the next manifest publish first runs
+    ``rival(table)``, which commits into the version slot that publish
+    was about to link — so the armed writer loses with FileExistsError
+    and must re-read the new head and rebuild. Patches the one commit
+    primitive every table service publishes through."""
     from shadowcat_data_spark.plans import lakehouse as LH
 
+    real = LH._commit_manifest
+
+    def arm(rival):
+        state = {"fired": False}
+
+        def racy(table, version, manifest, **kw):
+            if not state["fired"]:
+                state["fired"] = True
+                rival(table)
+            return real(table, version, manifest, **kw)
+
+        monkeypatch.setattr(LH, "_commit_manifest", racy)
+
+    return arm
+
+
+def _race_case_ops():
+    """op name -> (prepare(spark, table) -> ctx, run(spark, table, ctx),
+    the operation it stamps, check(spark, table, head values))."""
+    from shadowcat_data_spark.plans import lakehouse as LH
+    from shadowcat_data_spark.plans import lakehouse_evolve as EV
+    from shadowcat_data_spark.plans import lakehouse_mor as MOR
+    from shadowcat_data_spark.plans import lakehouse_wap as WAP
+    from shadowcat_data_spark.plans import lakehouse_zorder as Z
+
+    ddl = "k long, v double"
+    ch = "k long, op string, seq int, v double"
+
+    def nothing(spark, table):
+        return None
+
+    def rows(spark, data):
+        return spark.createDataFrame(data, ddl)
+
+    def single_file_buckets(spark, table, vals):
+        man = LH.read_manifest(table)
+        buckets = [man["stats"][f]["bucket"] for f in man["files"]]
+        return len(buckets) == len(set(buckets))
+
+    return {
+        "merge_partitioned": (
+            nothing,
+            lambda spark, t, _: LH.merge_partitioned(
+                spark, t, spark.createDataFrame([(1, "U", 1, 111.0)], ch)
+            ),
+            "merge",
+            lambda spark, t, vals: vals[1] == 111.0 and len(vals) == 40,
+        ),
+        "append_partitioned": (
+            nothing,
+            lambda spark, t, _: LH.append_partitioned(spark, t, rows(spark, [(500, 5.0)])),
+            "append",
+            lambda spark, t, vals: vals[500] == 5.0,
+        ),
+        "compact_partitioned": (
+            lambda spark, t: LH.append_partitioned(
+                spark, t, rows(spark, [(i, -1.0) for i in range(60, 100, 3)])
+            ),
+            lambda spark, t, _: LH.compact_partitioned(spark, t),
+            "compact",
+            single_file_buckets,
+        ),
+        "rewrite_sorted": (
+            nothing,
+            lambda spark, t, _: LH.rewrite_sorted(spark, t, "v", slices_per_bucket=2),
+            "rewrite-sort",
+            lambda spark, t, vals: len(vals) == 40,
+        ),
+        "evolve_schema": (
+            nothing,
+            lambda spark, t, _: LH.evolve_schema(t, ddl + ", tag string"),
+            "evolve-schema",
+            lambda spark, t, vals: LH.read_manifest(t)["schema"] == ddl + ", tag string",
+        ),
+        "rebound_partitioned": (
+            nothing,
+            lambda spark, t, _: LH.rebound_partitioned(spark, t, n_buckets=2),
+            "rebound",
+            lambda spark, t, vals: len(LH.read_manifest(t)["partition"]["bounds"]) == 1,
+        ),
+        "delete_mor": (
+            nothing,
+            lambda spark, t, _: MOR.delete_mor(
+                spark, t, spark.createDataFrame([(1,)], "k long")
+            ),
+            "delete",
+            lambda spark, t, vals: 1 not in vals and len(vals) == 39,
+        ),
+        "upsert_mor": (
+            nothing,
+            lambda spark, t, _: MOR.upsert_mor(spark, t, rows(spark, [(1, 111.0)])),
+            "upsert",
+            lambda spark, t, vals: vals[1] == 111.0 and len(vals) == 40,
+        ),
+        "materialize_deletes": (
+            lambda spark, t: MOR.delete_mor(
+                spark, t, spark.createDataFrame([(5,)], "k long")
+            ),
+            lambda spark, t, _: MOR.materialize_deletes(spark, t),
+            "materialize",
+            lambda spark, t, vals: 5 not in vals
+            and not LH.read_manifest(t)["delete_files"],
+        ),
+        "restore_snapshot": (
+            lambda spark, t: LH.merge_partitioned(
+                spark, t, spark.createDataFrame([(3, "U", 1, 333.0)], ch)
+            ),
+            lambda spark, t, _: WAP.restore_snapshot(t, 1),
+            "restore",
+            # restore undoes every commit after v1, the rival's included;
+            # the rival's commit survives in the log (asserted below)
+            lambda spark, t, vals: vals[2] == 2.0 and vals[3] == 3.0,
+        ),
+        "publish_staged": (
+            lambda spark, t: WAP.stage_append(spark, t, rows(spark, [(600, 6.0)])),
+            lambda spark, t, stage_id: WAP.publish_staged(t, stage_id),
+            "publish",
+            lambda spark, t, vals: vals[600] == 6.0,
+        ),
+        "rewrite_zorder": (
+            nothing,
+            lambda spark, t, _: Z.rewrite_zorder(
+                spark, t, ["k", "v"], bits=2, slices_per_bucket=2
+            ),
+            "rewrite-zorder",
+            lambda spark, t, vals: LH.read_manifest(t)["zorder"]["cols"] == ["k", "v"],
+        ),
+        "add_bloom_filters": (
+            nothing,
+            lambda spark, t, _: Z.add_bloom_filters(spark, t, "k"),
+            "add-bloom",
+            # the rival rewrote a bucket: the rebuilt bloom must cover it
+            lambda spark, t, vals: all(
+                "k" in st["bloom"] for st in LH.read_manifest(t)["stats"].values()
+            ),
+        ),
+        "evolve_partition_spec": (
+            nothing,
+            lambda spark, t, _: EV.evolve_partition_spec(spark, t, "v", n_buckets=2),
+            "evolve-spec",
+            lambda spark, t, vals: LH.read_manifest(t)["partition"]["key"] == "v",
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_race_case_ops()))
+def test_commit_race_loser_rebuilds_on_new_head(spark, tmp_path, lose_next_commit, op):
+    """Every table service commits through the one optimistic protocol: a
+    writer that loses the version race to a concurrent MERGE re-reads the
+    new head and rebuilds — it lands exactly one commit at head+1 and the
+    winner's change survives."""
+    from shadowcat_data_spark.plans import lakehouse as LH
+
+    prepare, run, operation, check = _race_case_ops()[op]
     table = str(tmp_path / "pt")
     ddl = "k long, v double"
     df = spark.createDataFrame([(i, float(i)) for i in range(40)], ddl)
     LH.create_partitioned(spark, df, table, ddl, "k", n_buckets=4)
-    ch_a = spark.createDataFrame(
-        [(1, "U", 1, 111.0)], "k long, op string, seq int, v double"
+    ctx = prepare(spark, table)
+    v0 = LH.current_version(table)
+    lose_next_commit(
+        lambda t: LH.merge_partitioned(
+            spark,
+            t,
+            spark.createDataFrame(
+                [(2, "U", 1, 222.0)], "k long, op string, seq int, v double"
+            ),
+        )
     )
-    ch_b = spark.createDataFrame(
-        [(2, "U", 1, 222.0), (200, "I", 1, 200.0)],
-        "k long, op string, seq int, v double",
-    )
-    real = LH._commit_manifest
-    state = {"fired": False}
-
-    def racy(t, version, manifest, **kw):
-        if not state["fired"]:
-            state["fired"] = True
-            LH.merge_partitioned(spark, t, ch_b)  # B steals A's version slot
-        return real(t, version, manifest, **kw)
-
-    LH._commit_manifest = racy
-    try:
-        LH.merge_partitioned(spark, table, ch_a)
-    finally:
-        LH._commit_manifest = real
-    assert LH.current_version(table) == 3  # v1 create, v2 B, v3 A's retry
+    run(spark, table, ctx)
+    assert LH.current_version(table) == v0 + 2  # the winner, then the loser
+    assert LH.read_manifest(table, v0 + 1)["operation"] == "merge"
+    assert LH.read_manifest(table, v0 + 2)["operation"] == operation
+    won = {r.k: r.v for r in LH.read_snapshot(spark, table, v0 + 1).collect()}
+    assert won[2] == 222.0
     vals = {r.k: r.v for r in LH.read_snapshot(spark, table).collect()}
-    assert vals[1] == 111.0 and vals[2] == 222.0 and vals[200] == 200.0
-    assert len(vals) == 41
+    if op != "restore_snapshot":
+        assert vals[2] == 222.0, "the loser's rebuild dropped the winner's change"
+    assert check(spark, table, vals)
+
+
+def test_range_rewrites_keep_table_codec(spark, tmp_path):
+    """The sort and z-order rewrites write through the shared stage tail,
+    so a zstd table (the text-index layout) keeps zstd files: every file
+    the manifest lists after each rewrite reports ZSTD in its footer."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from shadowcat_data_spark.plans import lakehouse as LH
+    from shadowcat_data_spark.plans import lakehouse_zorder as Z
+
+    table = str(tmp_path / "zt")
+    ddl = "k long, v double, w double"
+    df = spark.createDataFrame(
+        [(i, float(i % 17), float(i * 7 % 23)) for i in range(200)], ddl
+    )
+    LH.create_partitioned(spark, df, table, ddl, "k", n_buckets=2, codec="zstd")
+
+    def codecs() -> set[str]:
+        out = set()
+        for f in LH.read_manifest(table)["files"]:
+            md = pq.ParquetFile(os.path.join(table, f)).metadata
+            for rg in range(md.num_row_groups):
+                for j in range(md.num_columns):
+                    out.add(md.row_group(rg).column(j).compression)
+        return out
+
+    LH.rewrite_sorted(spark, table, "v", slices_per_bucket=2)
+    assert codecs() == {"ZSTD"}
+    Z.rewrite_zorder(spark, table, ["v", "w"], bits=2, slices_per_bucket=2)
+    assert codecs() == {"ZSTD"}
+    assert LH.read_manifest(table)["codec"] == "zstd"
 
 
 def test_compaction_binpacks_and_expire_reclaims(spark, tmp_path):
@@ -1687,7 +1895,7 @@ def test_ann_refresh_appends_without_rewrite(spark, tmp_path):
     assert len(self_hits) == hits.shape[0] == new.count()
 
 
-def test_concurrent_plain_merges_both_land(spark, tmp_path):
+def test_concurrent_plain_merges_both_land(spark, tmp_path, lose_next_commit):
     """merge_snapshot (unpartitioned) shares the retry loop: a loser of
     the version race re-reads and re-applies — serial-equivalent result."""
     from shadowcat_data_spark.plans import lakehouse as LH
@@ -1703,20 +1911,8 @@ def test_concurrent_plain_merges_both_land(spark, tmp_path):
     ch_b = spark.createDataFrame(
         [(2, "U", 1, 222.0)], "k long, op string, seq int, v double"
     )
-    real = LH._commit_manifest
-    state = {"fired": False}
-
-    def racy(t, version, manifest, **kw):
-        if not state["fired"]:
-            state["fired"] = True
-            LH.merge_snapshot(spark, t, ch_b, "k", ddl)
-        return real(t, version, manifest, **kw)
-
-    LH._commit_manifest = racy
-    try:
-        LH.merge_snapshot(spark, table, ch_a, "k", ddl)
-    finally:
-        LH._commit_manifest = real
+    lose_next_commit(lambda t: LH.merge_snapshot(spark, t, ch_b, "k", ddl))
+    LH.merge_snapshot(spark, table, ch_a, "k", ddl)
     assert LH.current_version(table) == 3
     vals = {r.k: r.v for r in LH.read_snapshot(spark, table).collect()}
     assert vals[1] == 111.0 and vals[2] == 222.0 and len(vals) == 10
@@ -1751,7 +1947,7 @@ def test_orphan_cleanup_spares_live_and_young_files(spark, tmp_path):
     assert {r.v for r in LH.read_snapshot(spark, table).filter("k = 1").collect()} == {9.0}
 
 
-def test_truly_concurrent_merges_serialize(spark, tmp_path):
+def test_truly_concurrent_merges_serialize(spark, tmp_path, monkeypatch):
     """Three OS threads merge disjoint change-sets into the same
     partitioned table simultaneously: the link()-based optimistic
     protocol must serialize them (each retrying losers re-apply), with
@@ -1764,6 +1960,7 @@ def test_truly_concurrent_merges_serialize(spark, tmp_path):
     ddl = "k long, v double"
     df = spark.createDataFrame([(i, float(i)) for i in range(30)], ddl)
     LH.create_partitioned(spark, df, table, ddl, "k", n_buckets=4)
+    monkeypatch.setattr(LH, "_COMMIT_RETRIES", 10)
     errs = []
 
     def writer(key: int):
@@ -1771,7 +1968,7 @@ def test_truly_concurrent_merges_serialize(spark, tmp_path):
             ch = spark.createDataFrame(
                 [(key, "U", 1, key * 100.0)], "k long, op string, seq int, v double"
             )
-            LH.merge_partitioned(spark, table, ch, max_retries=10)
+            LH.merge_partitioned(spark, table, ch)
         except Exception as exc:  # pragma: no cover - surfaced via assert
             errs.append(exc)
 
@@ -1801,8 +1998,9 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-from shadowcat_data_spark.plans.lakehouse import merge_snapshot
+from shadowcat_data_spark.plans import lakehouse as LH
 
+LH._COMMIT_RETRIES = 20
 table, wid = sys.argv[1], int(sys.argv[2])
 DDL = "o_orderkey long, o_totalprice double"
 for i in range(2):
@@ -1810,7 +2008,7 @@ for i in range(2):
     ch = spark.createDataFrame(
         rows, "o_orderkey long, op string, seq long, o_totalprice double"
     )
-    merge_snapshot(spark, table, ch, "o_orderkey", DDL, max_retries=20)
+    LH.merge_snapshot(spark, table, ch, "o_orderkey", DDL)
 print("XPROC_OK", wid)
 """
 
@@ -2219,39 +2417,6 @@ def test_mor_expire_and_orphans_respect_delete_files(spark, tmp_path):
     LH.expire_snapshots(table, keep_latest=1)
     assert not os.path.exists(os.path.join(table, dfile))
     assert LH.read_snapshot(spark, table).count() == 39
-
-
-def test_mor_concurrent_delete_and_merge_both_land(spark, tmp_path):
-    """A MOR delete losing the commit race to a COW merge must re-read the
-    new head and re-commit: both land, and the final state equals the
-    serial application."""
-    from shadowcat_data_spark.plans import lakehouse as LH
-    from shadowcat_data_spark.plans import lakehouse_mor as MOR
-
-    table = str(tmp_path / "pt")
-    ddl = "k long, v double"
-    df = spark.createDataFrame([(i, float(i)) for i in range(40)], ddl)
-    LH.create_partitioned(spark, df, table, ddl, "k", n_buckets=4)
-    ch_b = spark.createDataFrame(
-        [(2, "U", 1, 222.0)], "k long, op string, seq int, v double"
-    )
-    real = LH._commit_manifest
-    state = {"fired": False}
-
-    def racy(t, version, manifest, **kw):
-        if not state["fired"]:
-            state["fired"] = True
-            LH.merge_partitioned(spark, t, ch_b)  # B steals the version slot
-        return real(t, version, manifest, **kw)
-
-    LH._commit_manifest = racy
-    try:
-        MOR.delete_mor(spark, table, spark.createDataFrame([(1,)], "k long"))
-    finally:
-        LH._commit_manifest = real
-    assert LH.current_version(table) == 3  # v1 create, v2 B's merge, v3 delete
-    vals = {r.k: r.v for r in LH.read_snapshot(spark, table).collect()}
-    assert 1 not in vals and vals[2] == 222.0 and len(vals) == 39
 
 
 def test_restore_is_append_only_undo(spark, tmp_path):

@@ -69,11 +69,35 @@ EXTRA_QUERIES = [
 ]
 
 
-def run_once(spark, fn) -> float:
+# Whole-stage codegen compiles inside the timed runs (warm-ups excluded):
+# a steady-state run should compile nothing, so a nonzero count means the
+# codegen class cache is evicting classes the mix reuses.
+CODEGEN = {"codegen_compiles": 0, "codegen_compile_s": 0.0}
+
+
+def codegen_totals(spark) -> tuple[int, float]:
+    """(compiles, compile seconds) since the JVM started. The count is
+    ``CodegenMetrics.METRIC_COMPILATION_TIME``'s; that histogram keeps only
+    a decaying sample of per-compile times, so the seconds come from the
+    exact total the same compile step adds to, ``CodeGenerator.compileTime``
+    (ns)."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e9
+
+
+def run_once(spark, fn, timed: bool = True) -> float:
+    c0 = codegen_totals(spark)
     t0 = time.perf_counter()
     df = fn(spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    elapsed = time.perf_counter() - t0
+    if timed:
+        c1 = codegen_totals(spark)
+        CODEGEN["codegen_compiles"] += c1[0] - c0[0]
+        CODEGEN["codegen_compile_s"] += c1[1] - c0[1]
+    return elapsed
 
 
 def warm_table_cache(spark) -> None:
@@ -97,7 +121,7 @@ def run_pass(
     for name in names if names is not None else BENCH_QUERIES:
         fn = specs[name].fn
         try:
-            run_once(spark, fn)  # warm-up (codegen; scan cache if enabled)
+            run_once(spark, fn, timed=False)  # warm-up (codegen; scan cache if enabled)
             times[name] = round(
                 statistics.median(run_once(spark, fn) for _ in range(3)), 4
             )
@@ -122,7 +146,7 @@ def run_alternated(
     errors: dict[str, str] = {}
     for name in names:  # warm-up pass (codegen, fixture staging)
         try:
-            run_once(spark, specs[name].fn)
+            run_once(spark, specs[name].fn, timed=False)
         except Exception as exc:
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"[bench:{label}] {name}: ERROR {errors[name]}", file=sys.stderr)
@@ -180,6 +204,8 @@ def main() -> None:
         "queries_extra": extra_times,
         "queries_extra_spread": extra_spread,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "codegen_compiles": CODEGEN["codegen_compiles"],
+        "codegen_compile_s": round(CODEGEN["codegen_compile_s"], 3),
     }
     if errors or cold_errors or extra_errors:
         out["errors"] = {**cold_errors, **errors, **extra_errors}

@@ -9,10 +9,12 @@ partial-agg → shuffle on a high-cardinality key (term or doc_id).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from ..registry import query
-from ..session import load_table, materialize
+from ..session import load_table, local_files, materialize
 
 # Below this input size, l5's tf materialization costs more (a fixed
 # checkpoint-write job) than the second corpus tokenization it saves;
@@ -24,19 +26,11 @@ def _input_bytes(path: str) -> int:
     """Total bytes of a local fixture file/dir; "infinite" for URI-scheme
     or unstattable paths (cluster stores: presume the corpus pass is
     expensive and take the single-pass, materialized plan)."""
-    import os
+    files = local_files(path)
+    if files is None:
+        return 1 << 62
+    return sum(os.stat(f).st_size for f in files)
 
-    if "://" in path:
-        return 1 << 62
-    if os.path.isfile(path):
-        return os.stat(path).st_size
-    if not os.path.isdir(path):
-        return 1 << 62
-    total = 0
-    for dirpath, _dirs, files in os.walk(path):
-        for fn in files:
-            total += os.stat(os.path.join(dirpath, fn)).st_size
-    return total
 
 TOKENS = "string_split(text, ' ')"  # DuckDB-side tokenizer fragment
 

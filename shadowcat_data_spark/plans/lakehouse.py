@@ -531,7 +531,10 @@ def _write_bucket_files(
         split_cols = ["__bucket"]
     return _write_stage(
         staged.repartition(max(n_buckets, 1) * fpb, *split_cols)
-        .sortWithinPartitions(key)  # tight per-file min/max (s7's idea)
+        # tight per-file min/max (s7's idea). __bucket leads because the
+        # partitioned write requires that ordering: a bare key sort sits
+        # under the write's own Sort [__bucket] and the optimizer drops it.
+        .sortWithinPartitions("__bucket", key)
         .drop("__salt"),
         table,
         man,

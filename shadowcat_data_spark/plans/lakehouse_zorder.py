@@ -401,7 +401,10 @@ def pruned_files_bloom(
     path is gated on the COLUMN's DDL type matching the probe value type
     (integral col + int probes, or string col + str probes); any other
     pairing falls back to the one-job JVM path, whose cast+hash is exact
-    by construction."""
+    by construction. Probes that path cannot type as the column (a mixed
+    list such as ``[3, "x"]``, ints on a double column, any non-str probe
+    on a string column) raise ``ValueError`` naming the column and its
+    type."""
     man = read_manifest(table, version)
     total = len(man["files"])
     params = (man.get("bloom") or {}).get(col)
@@ -436,7 +439,20 @@ def pruned_files_bloom(
             for v in values
         ]
     else:  # type mismatch or exotic value types: the exact JVM cast+hash
-        probe = spark.createDataFrame([(v,) for v in values], f"v {vtype}")
+        kinds = ", ".join(sorted({type(v).__name__ for v in values}))
+        mistyped = ValueError(
+            f"bloom probe values for column {col!r} ({vtype}) must all be "
+            f"{vtype} values; got {kinds}"
+        )
+        if vtype == "string":
+            # some probe is not a str: the literal DataFrame would hash
+            # str(v) ("3.0" for 3.0) where the caller's predicate also
+            # matches the column's "3" — a silent false negative
+            raise mistyped
+        try:
+            probe = spark.createDataFrame([(v,) for v in values], f"v {vtype}")
+        except TypeError as exc:  # e.g. [3, "x"] on a long column
+            raise mistyped from exc
         pos = probe.select(*_hash_positions(F.col("v"), m_bits, k)).collect()
         want = [tuple(int(r[f"p{s}"]) for s in range(k)) for r in pos]
     stats = man.get("stats", {})

@@ -12,6 +12,15 @@ Design notes (scale-first):
   refuses to read natively — read nanos-as-long, truncate to µs) or plain
   TIMESTAMP(MICROS); ``load_table`` sniffs the read dtype and normalizes both
   to session-TZ TimestampType.
+- Generated code stays compiled between passes. ``get_spark`` sizes Spark's
+  codegen class cache (``spark.sql.codegen.cache.maxEntries``) to 2048
+  entries; Spark's default of 100 is below the working set of one pass.
+  Measured working sets at sf0.01, in distinct generated classes: perfbench
+  analytics 135, lakehouse 139, bench.py headline+extras 663. Every session
+  also drops the codegen stage id from class names, so AQE's run-to-run
+  stage numbering does not turn one pipeline into several classes. The
+  cache size is a STATIC conf: an externally owned session must set it when
+  it is built, because ``ensure_session`` cannot.
 """
 
 from __future__ import annotations
@@ -89,6 +98,13 @@ _DYNAMIC_CONFS = {
     # every probe re-scans what one commit wrote) pass compression="zstd"
     # through the lakehouse writers; everything else stays snappy.
     "spark.sql.parquet.compression.codec": "snappy",
+    # Keep the whole-stage codegen stage id out of generated class names.
+    # The class source is the codegen cache key, and AQE numbers stages in
+    # the order their inputs finish, so the same pipeline gets a different
+    # id (and name) from run to run: l5 at sf0.001 planned three numberings
+    # over 12 calls and recompiled 2-6 classes on each new one. Without the
+    # id, identical pipelines share one cached class.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -135,6 +151,21 @@ def get_spark(app_name: str = "shadowcat_data_spark") -> SparkSession:
         # locally. (On a real cluster with many files, leave this at default.)
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
+        # STATIC conf: the process-wide LRU of compiled generated classes.
+        # It cannot change on a running session, so it is not in
+        # _DYNAMIC_CONFS; an externally owned session must set it when built.
+        # Spark's default of 100 is below one pass of either perfbench mix,
+        # so the LRU evicted classes before their reuse and every steady
+        # pass recompiled them: 133 classes (~1.1 s of Janino time) per
+        # analytics pass and 71 (~0.6 s) per lakehouse pass at sf0.01 on 4
+        # cores. Distinct classes per process, counted with an unbounded
+        # cache: perfbench analytics 135, lakehouse 139, bench.py
+        # headline+extras 663 at sf0.01 — 2048 is 3x the largest repeated
+        # mix. The full sweep (341 queries, each run once) compiles 3165
+        # distinct classes, but a one-shot run only gains cross-query reuse
+        # from a bigger cache (at 1024 entries it recompiled 522 of them),
+        # so it does not set the size.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         # keep managed-table test artifacts (m7 catalog round-trip) out of
         # the repo tree — the default ./spark-warehouse accumulates one
         # sc_*.db per scratch sf_dir across test sessions
@@ -172,40 +203,50 @@ def ensure_session(spark: SparkSession) -> SparkSession:
 _SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
 
 
+def local_files(path: str) -> list[str] | None:
+    """Every file of a local fixture path, sorted: the file itself, or the
+    files under a directory-style table. ``None`` when ``path`` is not a
+    local filesystem path this process can stat (URI schemes like hdfs://
+    or s3a://, or a missing path): on those stores os.walk yields nothing,
+    so callers must treat the path as unknown, never as empty."""
+    if "://" in path:
+        return None
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    return sorted(
+        os.path.join(dirpath, fn) for dirpath, _dirs, files in os.walk(path) for fn in files
+    )
+
+
 def _fs_sig(root: str) -> tuple | None:
-    """Filesystem identity of a fixture path: (size, mtime_ns, file tail)
-    of the file, or (name, size, mtime_ns) of every file under it when it
-    is a directory-style parquet table.
+    """Filesystem identity of a fixture path: (relative path, size,
+    mtime_ns, last 16 bytes) of every file of it (``local_files``).
 
     Returns ``None`` — caller must BYPASS the memo — when the path is not
-    a local filesystem path this process can stat (URI schemes like
-    hdfs://, s3a://, or any unstattable path). On those stores os.walk
-    yields nothing, so a signature built here would compare equal forever
-    and pin the first-seen schema across fixture regenerations (VERDICT
-    r11 #3); plain inference is the correct cluster behavior, and cluster
-    tables should carry their schema in a manifest anyway (the lakehouse
-    reads already do).
+    a local path this process can stat: a signature of nothing would
+    compare equal forever and pin the first-seen schema across fixture
+    regenerations (VERDICT r11 #3); plain inference is the correct cluster
+    behavior, and cluster tables should carry their schema in a manifest
+    anyway (the lakehouse reads already do).
 
-    For single-file fixtures the signature also folds in the last 16
-    bytes of the file (parquet footer length + magic): (size, mtime_ns)
-    alone misses a same-size replacement with preserved timestamps
-    (cp -p / rsync -a / archive extraction — ADVICE r11), while a
-    different schema or row content virtually always moves the footer."""
-    if "://" in root:
-        return None
-    if os.path.isfile(root):
-        st = os.stat(root)
-        with open(root, "rb") as fh:
-            fh.seek(max(0, st.st_size - 16))
-            tail = fh.read(16)
-        return (st.st_size, st.st_mtime_ns, tail)
-    if not os.path.isdir(root):
+    The last 16 bytes of a parquet file are its footer length + magic:
+    (size, mtime_ns) alone misses a same-size replacement with preserved
+    timestamps (cp -p / rsync -a / archive extraction — ADVICE r11), while
+    a different schema or row content virtually always moves the footer.
+    The relative path catches a file moved between partition directories
+    of a directory-style table, where the basename alone does not change."""
+    files = local_files(root)
+    if files is None:
         return None
     parts = []
-    for dirpath, _dirs, files in sorted(os.walk(root)):
-        for fn in sorted(files):
-            st = os.stat(os.path.join(dirpath, fn))
-            parts.append((fn, st.st_size, st.st_mtime_ns))
+    for f in files:
+        st = os.stat(f)
+        with open(f, "rb") as fh:
+            fh.seek(max(0, st.st_size - 16))
+            tail = fh.read(16)
+        parts.append((os.path.relpath(f, root), st.st_size, st.st_mtime_ns, tail))
     return tuple(parts)
 
 

@@ -1626,6 +1626,31 @@ def test_range_rewrites_keep_table_codec(spark, tmp_path):
     assert LH.read_manifest(table)["codec"] == "zstd"
 
 
+def test_bucket_files_sorted_by_key(spark, tmp_path):
+    """Each bucket file is written in key order (tight per-file min/max).
+    The partitioned write orders rows by ``__bucket`` itself; a sort on
+    the key alone sat under that Sort and the optimizer removed it, so
+    files kept their shuffle order."""
+    import os
+    import random
+
+    import pyarrow.parquet as pq
+
+    from shadowcat_data_spark.plans import lakehouse as LH
+
+    keys = list(range(400))
+    random.Random(7).shuffle(keys)
+    ddl = "k long, v double"
+    df = spark.createDataFrame([(k, float(k)) for k in keys], ddl).repartition(4)
+    table = str(tmp_path / "st")
+    LH.create_partitioned(spark, df, table, ddl, "k", n_buckets=2)
+    files = LH.read_manifest(table)["files"]
+    assert files
+    for f in files:
+        ks = pq.read_table(os.path.join(table, f), columns=["k"])["k"].to_pylist()
+        assert len(ks) > 1 and ks == sorted(ks), f
+
+
 def test_compaction_binpacks_and_expire_reclaims(spark, tmp_path):
     """Append leaves multi-file buckets; compaction bin-packs each back to
     one file with identical content; expire afterwards reclaims the

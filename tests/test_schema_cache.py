@@ -91,3 +91,64 @@ def test_events_normalization_survives_cache(spark):
     ra = a.select(F.max("ts")).first()[0]
     rb = b.select(F.max("ts")).first()[0]
     assert ra == rb
+
+
+def _dir_table(root) -> str:
+    """A directory-style parquet table with two partition directories."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = os.path.join(str(root), "t.parquet")
+    for part, vals in (("p=1", [1, 2, 3]), ("p=2", [4, 5, 6])):
+        os.makedirs(os.path.join(table, part))
+        pq.write_table(pa.table({"x": vals}), os.path.join(table, part, "part-0.parquet"))
+    return table
+
+
+def test_dir_sig_sees_file_moved_between_partitions(tmp_path):
+    # ADVICE r12: the directory branch keyed files on basename alone, so a
+    # file moved to another partition directory (same name, size, mtime)
+    # left the signature unchanged.
+    table = _dir_table(tmp_path)
+    src = os.path.join(table, "p=2", "part-0.parquet")
+    os.makedirs(os.path.join(table, "p=3"))
+    sig_a = S._fs_sig(table)
+    os.rename(src, os.path.join(table, "p=3", "part-0.parquet"))  # keeps mtime
+    assert S._fs_sig(table) != sig_a
+
+
+def test_dir_sig_sees_same_size_preserved_mtime_rewrite(tmp_path):
+    # the single-file footer-tail check, applied to every file of a table
+    table = _dir_table(tmp_path)
+    path = os.path.join(table, "p=1", "part-0.parquet")
+    st = os.stat(path)
+    sig_a = S._fs_sig(table)
+    with open(path, "r+b") as fh:
+        fh.seek(st.st_size - 5)
+        tail = fh.read(5)
+        fh.seek(st.st_size - 5)
+        fh.write(bytes(b ^ 0xFF for b in tail))
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert S._fs_sig(table) != sig_a
+
+
+def test_local_files_shared_by_l5_size_gate(tmp_path):
+    # l5's 256 MB materialization gate sizes its input through the same
+    # local-path detection as the schema memo: a file's size, a table
+    # directory's total, "infinite" for URI-scheme and missing paths.
+    from shadowcat_data_spark.pipeline import text as T
+
+    table = _dir_table(tmp_path)
+    files = S.local_files(table)
+    assert [os.path.relpath(f, table) for f in files] == [
+        os.path.join("p=1", "part-0.parquet"),
+        os.path.join("p=2", "part-0.parquet"),
+    ]
+    assert S.local_files(files[0]) == [files[0]]
+    assert S.local_files("s3a://bucket/t.parquet") is None
+    assert S.local_files(str(tmp_path / "missing.parquet")) is None
+    assert T._input_bytes(table) == sum(os.stat(f).st_size for f in files)
+    assert T._input_bytes(files[0]) == os.stat(files[0]).st_size
+    for unknown in ("hdfs://nn/docs.parquet", str(tmp_path / "missing.parquet")):
+        assert T._input_bytes(unknown) >= T._L5_MAT_MIN_BYTES
+    assert T._input_bytes(f"{SF}/documents.parquet") < T._L5_MAT_MIN_BYTES

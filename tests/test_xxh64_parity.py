@@ -186,3 +186,28 @@ def test_bloom_probe_type_mismatch_routes_to_jvm(spark, tmp_path):
     add_bloom_filters(spark, table, "x")
     with pytest.raises(Exception):  # loud, not a silent wrong answer
         pruned_files_bloom(spark, table, "x", [3, 50022])
+
+
+def test_bloom_probe_mixed_types_name_the_column(spark, tmp_path):
+    """A probe list mixing value types (``[3, "x"]``) has no exact cast to
+    the column's type. It must fail with a ValueError that names the
+    column and its type, on an integral and on a string column alike (a
+    string column would otherwise hash str(3) and could miss "03")."""
+    import pytest
+
+    from shadowcat_data_spark.plans.lakehouse import create_partitioned
+    from shadowcat_data_spark.plans.lakehouse_zorder import (
+        add_bloom_filters,
+        pruned_files_bloom,
+    )
+
+    df = spark.range(0, 200).select(
+        F.col("id").alias("u"), F.col("id").cast("string").alias("s")
+    )
+    table = str(tmp_path / "bloomed_mixed")
+    create_partitioned(spark, df, table, "u long, s string", "u", n_buckets=2)
+    add_bloom_filters(spark, table, "u")
+    add_bloom_filters(spark, table, "s")
+    for col, vtype in (("u", "long"), ("s", "string")):
+        with pytest.raises(ValueError, match=rf"'{col}' \({vtype}\).*int, str"):
+            pruned_files_bloom(spark, table, col, [3, "x"])
